@@ -22,7 +22,10 @@ object Q {
     * Only the analyzed LogicalPlan is memoized; every call wraps it in a
     * fresh Dataset (fresh QueryExecution), so optimization, physical
     * planning, AQE and the full execution from parquet re-run per
-    * invocation under the caller's CURRENT conf — memoizing the Dataset
+    * invocation under the caller's current conf. Analysis-time conf is
+    * baked into the memoized plan, though (e.g. the session time zone
+    * stamped into time expressions), so a mid-session change to it is not
+    * seen by an already-memoized query. Memoizing the Dataset
     * itself froze executedPlan at first forcing and made plan audits
     * order/conf-dependent (r16 ADVICE, fixed r17). No data, plan
     * statistics or results are reused; rewritten inputs re-analyze via

@@ -1,9 +1,12 @@
 package graft.api
 
+import scala.collection.concurrent.TrieMap
+
 import graft.domain._
 import graft.ingest.SilverWriter
 import graft.operators.Aggregates
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,10 +23,33 @@ import org.apache.spark.sql.functions._
   * ingest_activity/catch_up_ingest -> sources.GarminJson +
   * streaming.Streams.catchUp; save/get profile + reviews -> plain
   * SilverWriter.upsertByPartition round trips; export -> SilverWriter.export.
+  *
+  * Each table is read once per Graft: the first [[table]] call lists the
+  * directory and infers the schema, later calls reuse that resolution. A
+  * write through SilverWriter (Streams.upsertSink and Streams.catchUp
+  * included) or [[athlete]] invalidates it, and the next call re-reads the
+  * table. A write that bypasses both needs a new Graft.
   */
 final class Graft(val spark: SparkSession, root: String) {
 
-  def table(name: String): DataFrame = spark.read.parquet(s"$root/$name")
+  /** Table name -> (write generation, analyzed plan) of each resolved
+    * table. The analyzed plan holds the listed file index and the inferred
+    * schema; each call wraps it in a fresh Dataset, so optimization,
+    * partition pruning, planning and AQE still run per call. A failed
+    * resolution (missing table) is not kept.
+    */
+  private val resolved = TrieMap.empty[String, (Long, LogicalPlan)]
+
+  def table(name: String): DataFrame = {
+    val path = s"$root/$name"
+    val gen = SilverWriter.generation(spark, path)
+    val plan = resolved.get(name).collect { case (`gen`, p) => p }.getOrElse {
+      val p = spark.read.parquet(path).queryExecution.analyzed
+      resolved.put(name, gen -> p)
+      p
+    }
+    GraftBridge.ofRows(spark, plan)
+  }
 
   /** Validate-then-select column allowlist (reference
     * readers/metadata.py:18-35): caller-supplied column names are checked
@@ -426,11 +452,11 @@ final class Graft(val spark: SparkSession, root: String) {
           .collect().toSeq
           .filterNot(r => ids(r.getAs[String]("user_id")))
         catch { case _: org.apache.spark.sql.AnalysisException => Seq.empty }
-      spark.createDataFrame(
+      val path = s"$root/athlete_profile"
+      SilverWriter.written(spark, path)(spark.createDataFrame(
         spark.sparkContext.parallelize(newRows ++ others),
         graft.Schemas.athleteProfile)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$root/athlete_profile")
+        .coalesce(1).write.mode("overwrite").parquet(path))
     }
 
     def profile(userId: String = "default"): Option[org.apache.spark.sql.Row] =
@@ -439,9 +465,7 @@ final class Graft(val spark: SparkSession, root: String) {
       catch { case _: org.apache.spark.sql.AnalysisException => None }
 
     /** Append a weekly review revision (append-only; latest wins at read). */
-    def saveWeeklyReview(review: DataFrame): Unit =
-      conformed(review, "weekly_reviews")
-        .write.mode("append").parquet(s"$root/weekly_reviews")
+    def saveWeeklyReview(review: DataFrame): Unit = append(review, "weekly_reviews")
 
     /** Latest revision per reviewed week (the latest-wins window). */
     def latestReviews(): DataFrame =
@@ -449,9 +473,13 @@ final class Graft(val spark: SparkSession, root: String) {
         table("weekly_reviews"), "week_start_date", "created_at", "review_id")
 
     /** Register a race goal (append-only). */
-    def saveGoal(goal: DataFrame): Unit =
-      conformed(goal, "athlete_goals")
-        .write.mode("append").parquet(s"$root/athlete_goals")
+    def saveGoal(goal: DataFrame): Unit = append(goal, "athlete_goals")
+
+    private def append(df: DataFrame, tableName: String): Unit = {
+      val path = s"$root/$tableName"
+      SilverWriter.written(spark, path)(
+        conformed(df, tableName).write.mode("append").parquet(path))
+    }
   }
 
   /** Training-data pipeline tier over a corpus directory

@@ -1,5 +1,8 @@
 package graft.ingest
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Silver-layer persistence: idempotent per-activity overwrite and the
@@ -12,20 +15,47 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partition directory, every other partition untouched. Same idempotence,
   * and at 100 TB the partition key doubles as the pruning key for every
   * per-activity read.
+  *
+  * Read-side freshness: every write here bumps its path's write
+  * generation once the write returns (or fails part-way). A reader that
+  * keeps a resolved table — api.Graft resolves each table once — compares
+  * generations and re-resolves after any write through this object
+  * (Streams.upsertSink and Streams.catchUp included) or through
+  * Graft.athlete. A write that bypasses both is invisible to such
+  * a reader; read it through a new Graft.
   */
 object SilverWriter {
+
+  private val generations = new ConcurrentHashMap[String, Long]()
+
+  /** `path` qualified by its FileSystem: `root/x`, `root/x/` and the
+    * absolute form name one table.
+    */
+  private def qualified(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
+  }
+
+  /** Writes so far to `path` (0 if none). */
+  private[graft] def generation(spark: SparkSession, path: String): Long =
+    generations.getOrDefault(qualified(spark, path), 0L)
+
+  /** Run `write` against `path`, then mark `path` stale for readers. */
+  private[graft] def written[A](spark: SparkSession, path: String)(write: => A): A =
+    try write finally generations.merge(qualified(spark, path), 1L, _ + _)
 
   /** Overwrite only the partitions present in `df` (dynamic mode is set
     * per-write, not globally, so batch jobs can't clobber a whole table by
     * accident).
     */
   def upsertByPartition(df: DataFrame, path: String,
-      partitionCol: String = "activity_id"): Unit =
+      partitionCol: String = "activity_id"): Unit = written(df.sparkSession, path) {
     df.write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(path)
+  }
 
   /** Export with a pre-count guard (reference `readers/export.py:19-93`:
     * COPY TO with a row-cap check). Returns the exported row count; throws
@@ -38,11 +68,11 @@ object SilverWriter {
       throw new IllegalArgumentException(
         s"export would write $n rows, exceeding max_rows=$maxRows")
     val writer = df.coalesce(1).write.mode("overwrite")
-    format.toLowerCase match {
+    written(df.sparkSession, path)(format.toLowerCase match {
       case "parquet" => writer.parquet(path)
       case "csv" => writer.option("header", "true").csv(path)
       case other => throw new IllegalArgumentException(s"unknown format: $other")
-    }
+    })
     n
   }
 
@@ -60,7 +90,7 @@ object SilverWriter {
   val DefaultBuckets = 32
 
   def writeBucketed(df: DataFrame, table: String, path: String,
-      key: String, buckets: Int = DefaultBuckets): Unit =
+      key: String, buckets: Int = DefaultBuckets): Unit = written(df.sparkSession, path) {
     df.write
       .mode("overwrite")
       .option("path", path)
@@ -68,6 +98,7 @@ object SilverWriter {
       .sortBy(key)
       .format("parquet")
       .saveAsTable(table)
+  }
 
   /** Catch-up high-water-mark: the max of a date/ordering column, used to
     * bound the next incremental read (reference `db_reader.py:217-282`).

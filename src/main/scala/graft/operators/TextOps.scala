@@ -1256,8 +1256,10 @@ object TextOps {
           regexp_replace(col("props"), "[0-9]+", "<NUM>").as("masked"),
           size(expr("regexp_extract_all(props, '[0-9]+', 0)")).cast("long")
             .as("n_masked"))
-        // narrow repartition: the range sampler re-ran both regexes over
-        // the props blob — see q_doc_chunks / q_json_extract
+        // the range sampler re-ran both regexes over the props blob; this
+        // hash exchange materializes their output instead. It is not
+        // narrow: each row carries the full masked props payload, so at
+        // scale it trades a full-width shuffle for the second regex pass
         .repartition(col("event_id"))
         .orderBy("event_id")
     },

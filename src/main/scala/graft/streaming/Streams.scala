@@ -19,6 +19,8 @@ object Streams {
   /** Incremental catch-up over a growing directory of parquet activity
     * batches: processes only files unseen by the checkpoint, applies the
     * transform, appends to the silver path, and returns when caught up.
+    * Marks the silver path stale for api.Graft readers, as SilverWriter
+    * does.
     */
   def catchUp(spark: SparkSession, sourceDir: String, checkpointDir: String,
       outDir: String, schema: org.apache.spark.sql.types.StructType,
@@ -26,13 +28,13 @@ object Streams {
     val stream = spark.readStream
       .schema(schema)
       .parquet(sourceDir)
-    transform(stream).writeStream
+    graft.ingest.SilverWriter.written(spark, outDir)(transform(stream).writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
-      .awaitTermination()
+      .awaitTermination())
   }
 
   /** Streaming analog of the batch gap-sessionization (form_events.py:63-80
